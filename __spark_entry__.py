@@ -24,22 +24,24 @@ if _REPO not in sys.path:
 SF0001 = "/root/testdata/sf0.001"
 
 def _fingerprint(path: str) -> str:
-    """Content fingerprint (name+size+mtime of data files) of a file or
+    """Content fingerprint (names + bytes of data files) of a file or
     parquet dir.  /tmp caches derived from a source embed this in their
     path, so regenerating the source (or editing the synthetic
     generator) silently invalidates the stale cache instead of reusing
-    it (ADVICE-r3)."""
+    it (ADVICE-r3).  Bytes, not mtimes: every checkout of the same
+    sources renders the same paths (and so the same oracle SQL)."""
     import hashlib
     h = hashlib.md5(path.encode())
     if os.path.isdir(path):
-        for name in sorted(os.listdir(path)):
-            if name.startswith(("_", ".")):
-                continue
-            st = os.stat(os.path.join(path, name))
-            h.update(f"{name}:{st.st_size}:{int(st.st_mtime)}".encode())
-    elif os.path.exists(path):
-        st = os.stat(path)
-        h.update(f"{st.st_size}:{int(st.st_mtime)}".encode())
+        files = [os.path.join(path, n) for n in sorted(os.listdir(path))
+                 if not n.startswith(("_", "."))]
+    else:
+        files = [path] if os.path.exists(path) else []
+    for f in files:
+        h.update(os.path.basename(f).encode())
+        with open(f, "rb") as fh:
+            for block in iter(lambda: fh.read(1 << 20), b""):
+                h.update(block)
     return h.hexdigest()[:10]
 
 
@@ -102,22 +104,18 @@ def _prefiltered(v, df: DataFrame) -> DataFrame:
     """Validator-query input: keep only rows that can produce a
     violation row, BEFORE the parallelism floor.
 
-    `v.valid_column` is the AND chain of the check predicates; under
-    Kleene logic it is FALSE exactly when some check predicate is
-    false — which is exactly when `_violation_array()` is non-empty
-    (each violation entry fires on `~coalesce(pred, true)`), so
-    `violations(filtered)` == `violations(df)` row for row (the
-    `_extra_ok` terms can only keep extra rows, which the size>0
-    filter above drops as before; verified identical on sf0.01/0.1
-    and the sf1.0 shape).  The win: this filter is deterministic, so
-    it pushes below the floor exchange to the SCAN — passing rows pay
+    `v.valid_column` is never NULL, so it is False whenever some check
+    fails: every row with a violation survives, and
+    `violations(filtered)` == `violations(df)` row for row.  The win:
+    this filter is deterministic, so it pushes below the floor
+    exchange to the SCAN — passing rows pay
     one cheap codegen'd boolean chain and never reach the exchange or
     the struct/message-building array evaluation (measured at the
     sf1.0 shape: violations 6.5→4.4 s, best_match 8.1→5.7 s,
     error_tree 6.4→4.1 s).  Used only for specs whose predicates are
     fully native (no pandas-UDF format/pattern fallbacks — those
     would run twice)."""
-    return _fan(df.filter(v.valid_column == False))  # noqa: E712
+    return _fan(df.filter(~v.valid_column))
 
 
 # --------------------------------------------------------------- specs ----

@@ -31,6 +31,15 @@ def _row_scope(ctx: CompileContext) -> bool:
     return ctx.target is None
 
 
+def _null_fails(ctx: CompileContext, pred: Column) -> Column:
+    """`pred` that is False on a present JSON null.  Only an array
+    element (or a bare instance) can be a present null; a NULL property
+    is absent and passes via the binding guard, so it needs no term."""
+    if ctx.null_is_absent:
+        return pred
+    return cached_expr(ctx, "isnotnull", ctx.target.isNotNull) & pred
+
+
 # ---------------------------------------------------------------- type ----
 
 def _type_pred_for(ctx: CompileContext, t: str) -> Optional[Column]:
@@ -102,8 +111,8 @@ def c_type(ctx: CompileContext, value: Any, schema: dict) -> Optional[Node]:
     pred = preds[0]
     for p in preds[1:]:
         pred = pred | p
-    if not ctx.null_is_absent and "null" not in types:
-        pred = cached_expr(ctx, "isnotnull", ctx.target.isNotNull) & pred
+    if "null" not in types:
+        pred = _null_fails(ctx, pred)
     msg = fmt_message(ctx, "%s is not of type " + _fmt_types(types).replace("%", "%%"))
     if all(_is_static_false(p) for p in preds):
         ctx.warn(f"type {types} can never match Spark type "
@@ -228,13 +237,16 @@ def c_enum(ctx: CompileContext, value: Any, schema: dict) -> Optional[Node]:
     """`enum` (_keywords.py:269-271): scalar enums compile to ONE
     `isin` (broadcast hash lookup, one py4j call regardless of enum
     size — the const-vs-enum guard); structural members fall back to
-    typed equality."""
+    typed equality.  A present null matches only a `null` member, which
+    always takes the structural path (``typed_literal_eq(None)`` is
+    ``isNull``)."""
     if _row_scope(ctx):
         ctx.warn("enum at row scope unsupported; ignored")
         return None
     scalars = _scalar_isin_values(ctx, value)
     if scalars is not None:
-        pred = ctx.target.isin(*scalars) if scalars else F.lit(False)
+        pred = (_null_fails(ctx, ctx.target.isin(*scalars)) if scalars
+                else F.lit(False))
     else:
         eqs = [e for e in (_literal_eq(ctx, v) for v in value)
                if e is not None]
@@ -268,6 +280,10 @@ def _numeric_kw(ctx: CompileContext, keyword: str, value: Any,
     if not isinstance(value, (int, float)) or isinstance(value, bool):
         raise SchemaCompileError(f"{keyword} value must be a number")
     pred = op(ctx.target, F.lit(value))
+    if isinstance(ctx.dtype, (T.FloatType, T.DoubleType)):
+        # every Python comparison with NaN is False, so no bound fires
+        # on NaN; Spark instead orders NaN above every number
+        pred = F.isnan(ctx.target) | pred
     msg = fmt_message(ctx, f"%s violates {keyword} {value}")
     return make_check(ctx, keyword, pred, msg)
 
@@ -490,11 +506,16 @@ def c_unique_items(ctx: CompileContext, value, schema) -> Optional[Node]:
 
     Typed arrays make bool-vs-int confusion impossible; Spark's
     ``array_distinct`` hashes natively (the reference's fast path).
+    Python's ``-0.0 == 0.0`` while Spark hashes them apart, so float
+    elements are normalized first (``x + 0.0`` maps -0.0 to 0.0).
     """
     if _row_scope(ctx) or not ctx.is_array() or value is not True:
         return None
     c = ctx.target
-    pred = F.size(c) == F.size(F.array_distinct(c))
+    elems = c
+    if isinstance(ctx.dtype.elementType, (T.FloatType, T.DoubleType)):
+        elems = F.transform(c, lambda x: x + 0.0)
+    pred = F.size(c) == F.size(F.array_distinct(elems))
     return make_check(ctx, "uniqueItems", pred,
                       fmt_message(ctx, "%s has non-unique elements"))
 

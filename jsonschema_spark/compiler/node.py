@@ -24,9 +24,16 @@ class Check:
     """One keyword bound to one instance location.
 
     ``pred`` is a Column evaluating to True when the row satisfies the
-    keyword.  NULL-at-binding rows are handled by the caller (a NULL column
-    means "property absent", so every property-bound check passes except
-    ``required``).
+    keyword.  The engine's one NULL rule: NULL means does not apply;
+    enum/const/type decide nulls explicitly.  A NULL binding is an
+    absent property, so every check bound there passes (except
+    presence assertions such as ``required``), and a predicate that is
+    NULL on a present value -- e.g. ``minimum`` on a null array element
+    -- passes as well.  ``enum``, ``const`` and ``type`` instead give a
+    definite answer for a present null.  ``compile_subschema`` applies
+    the rule once, so every emitted ``pred`` is non-NULL and validity,
+    counts, manifests and violation rows all derive from the same
+    booleans.
     """
 
     keyword: str
@@ -50,6 +57,10 @@ class Check:
     #: the error's schema (the reference's KeyError -> False).  The 5th
     #: by_relevance element (exceptions.py:421).
     type_match: Optional[Column] = None
+    #: set once ``compile_subschema`` has applied the NULL rule; ``pred``
+    #: stays non-NULL after that, as enclosing levels only combine it
+    #: with non-NULL terms
+    decided: bool = False
 
 
 @dataclass

@@ -170,6 +170,20 @@ def guard(ctx: CompileContext, pred: Column) -> Column:
     return cached_expr(ctx, "isnull", lambda: ctx.target.isNull()) | pred
 
 
+def decide(ctx: CompileContext, chk: Check) -> None:
+    """Apply the engine's one NULL rule (see :class:`Check`) to `chk` in
+    place: an absent property passes (:func:`guard`), and a predicate
+    that is NULL on a present value means the keyword does not apply, so
+    it passes too.  ``ifnull`` (= ``coalesce(pred, true)``) is added
+    once, at the innermost level; enclosing levels only OR in non-NULL
+    terms."""
+    if not chk.skip_null_guard:
+        chk.pred = guard(ctx, chk.pred)
+    if not chk.decided:
+        chk.pred = F.ifnull(chk.pred, cached_lit(ctx, True))
+        chk.decided = True
+
+
 def type_match_column(ctx: CompileContext, schema: Any) -> Column:
     """``ValidationError._matches_type()`` (exceptions.py:184-197) as a
     compile-time Column: True when `schema`'s ``type`` matches the
@@ -298,17 +312,13 @@ def compile_subschema(ctx: CompileContext, schema: Any) -> Node:
         node = fn(ctx.child(schema_fragment=None), value, schema)
         if node is None:
             continue
-        for chk in node.checks:
-            if not chk.skip_null_guard:
-                chk.pred = guard(ctx, chk.pred)
+        for chk in node.checks + node.context:
+            decide(ctx, chk)
             annotate(chk)
-            out.checks.append(chk)
-        for chk in node.context:
-            if not chk.skip_null_guard:
-                chk.pred = guard(ctx, chk.pred)
-            annotate(chk)
-            out.context.append(chk)
-        out._extra_ok.extend(guard(ctx, p) for p in node._extra_ok)
+        out.checks.extend(node.checks)
+        out.context.extend(node.context)
+        out._extra_ok.extend(F.ifnull(guard(ctx, p), cached_lit(ctx, True))
+                             for p in node._extra_ok)
 
     # annotation keywords produce output units (2020-12 "basic" format)
     # when the owning subschema successfully applies to a present

@@ -47,6 +47,7 @@ from .compiler.context import CompileContext
 from .compiler.registry import (SchemaCompileError, compile_subschema,
                                 default_registry)
 from .compiler.resolver import Resolver
+from .validator import violation_array
 
 SUITE_DIR = "/root/reference/json/tests"
 REMOTES_DIR = "/root/reference/json/remotes"
@@ -309,9 +310,8 @@ def evaluate_case(spark: SparkSession, schema: Any,
             resolver=case_res, base_uri=root_uri,
             dynamic_scope=(root_uri,))
         node = compile_subschema(ctx, schema)
-        ok = F.coalesce(node.ok, F.lit(False))
-        got = {r["_i"]: bool(r["ok"])
-               for r in df.select("_i", ok.alias("ok")).collect()}
+        got = {r["_i"]: r["ok"]
+               for r in df.select("_i", node.ok.alias("ok")).collect()}
         for local_i, global_i in enumerate(idxs):
             verdicts[global_i] = got[local_i]
     return verdicts
@@ -497,26 +497,20 @@ def _basic_output_for_case(spark: SparkSession, schema: Any, instance: Any,
             return base_id + "#" + kw_loc
         return None
 
-    valid = bool(df.select(F.coalesce(node.ok, F.lit(False)).alias("ok"))
-                 .first()["ok"])
+    valid = df.select(node.ok.alias("ok")).first()["ok"]
     out: dict = {"valid": valid, "keywordLocation": "",
                  "instanceLocation": ""}
     if base_id:
         out["absoluteKeywordLocation"] = base_id + "#"
     if not valid:
-        structs = [F.when(~F.coalesce(c.pred, F.lit(True)), F.struct(
-            F.lit(c.schema_path).alias("sp"),
-            F.lit(c.json_path).alias("jp"),
-            c.message.cast("string").alias("msg")))
-            for c in node.checks]
         units = []
-        if structs:
-            arr = F.filter(F.array(*structs), lambda x: x.isNotNull())
-            rows = (df.select(F.explode(arr).alias("_v"))
-                    .select(F.col("_v.sp").alias("sp"),
-                            _jsonpath_to_pointer(F.col("_v.jp"))
+        if node.checks:
+            rows = (df.select(F.explode(violation_array(node.checks))
+                              .alias("_v"))
+                    .select(F.col("_v.schema_path").alias("sp"),
+                            _jsonpath_to_pointer(F.col("_v.json_path"))
                             .alias("il"),
-                            F.col("_v.msg").alias("msg")).collect())
+                            F.col("_v.message").alias("msg")).collect())
             for r in rows:
                 u = {"valid": False,
                      "keywordLocation": "/" + r["sp"],
@@ -535,7 +529,7 @@ def _basic_output_for_case(spark: SparkSession, schema: Any, instance: Any,
         # ONE job evaluates every annotation's applicability + pointer
         row = df.select(*[
             F.struct(
-                F.coalesce(a_unit.pred, F.lit(False)).alias("applies"),
+                a_unit.pred.alias("applies"),
                 _jsonpath_to_pointer(F.lit(a_unit.json_path)).alias("il"),
             ).alias(f"_a{i}")
             for i, a_unit in enumerate(ctx.annotations)]).first()

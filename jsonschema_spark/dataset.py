@@ -454,9 +454,8 @@ def full_check_counts(df: DataFrame, schema: dict,
 
     v = CompiledValidator({k: s for k, s in schema.items()
                            if k != "x-spark"}, df)
-    valid = F.coalesce(v.valid_column, F.lit(True))
     extra_aggs = [F.count(F.lit(1)).alias("_c"),
-                  F.sum((~valid).cast("long")).alias("_bad")]
+                  F.sum((~v.valid_column).cast("long")).alias("_bad")]
     quality_cols: dict[str, str] = {}
     if image_quality:
         from .operators.quality import image_quality_flags

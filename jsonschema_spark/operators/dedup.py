@@ -17,9 +17,6 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-MAX_HASH = (1 << 62)
-
-
 def ensure_parallelism(df: DataFrame) -> DataFrame:
     """Repartition up to the cluster's default parallelism when the
     input arrives in fewer partitions (e.g. one small parquet file) —
@@ -86,36 +83,6 @@ def shingles(text: Column, k: int = 5) -> Column:
 
 
 # ------------------------------------------------------------ minhash -----
-
-def minhash_signature(items: Column, num_hashes: int = 64) -> Column:
-    """MinHash signature: for each of `num_hashes` seeded hash functions,
-    the min of xxhash64(item, seed) over the item set.  One pass via
-    F.aggregate with a zip_with(least) accumulator — O(|items| * H) JVM
-    work, zero Python."""
-    init = F.array_repeat(F.lit(MAX_HASH).cast("long"), num_hashes)
-    seeds = F.sequence(F.lit(0), F.lit(num_hashes - 1))
-    return F.aggregate(
-        items, init,
-        lambda acc, it: F.zip_with(
-            acc,
-            F.transform(seeds, lambda s: F.xxhash64(it, s)),
-            lambda a, b: F.least(a, b)))
-
-
-def minhash_bands(sig: Column, bands: int, rows_per_band: int) -> Column:
-    """Array of `bands` LSH bucket keys: hash of each signature slice.
-
-    Band/row counts are Python ints, so the whole array is literal
-    ``xxhash64(band, sig[i], ...)`` expressions — fully codegen'd, no
-    interpreted HOF lambda and no per-row string allocation (hashing the
-    slice elements directly beats building a joined string per band)."""
-    return F.array(*[
-        F.xxhash64(F.lit(b),
-                   *[F.element_at(sig, b * rows_per_band + r + 1)
-                     for r in range(rows_per_band)])
-        for b in range(bands)
-    ])
-
 
 def minhash_signatures_df(df: DataFrame, id_col: str, text_col: str,
                           num_hashes: int = 64,
@@ -470,12 +437,6 @@ def simhash(items: Column, bits: int = 64) -> Column:
         items, init,
         lambda acc, it: F.zip_with(acc, contribs(it), lambda a, v: a + v))
     return F.transform(counts, lambda c: (c > 0).cast("int"))
-
-
-def hamming_distance(a: Column, b: Column) -> Column:
-    """Hamming distance between two bit arrays (native)."""
-    return F.size(F.filter(F.zip_with(a, b, lambda x, y: x != y),
-                           lambda v: v))
 
 
 def simhash_signatures_df(df: DataFrame, id_col: str, text_col: str,
@@ -1055,24 +1016,6 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
                        F.explode(F.sequence(F.lit(1), cnt)).alias("_i"))
                .select("_id",
                        F.array_join(F.slice("_w", F.col("_i"), n), " ")
-                       .alias("_g"))
-               .distinct())
-    return _jaccard_pairs_from_posting(posting, min_jaccard, max_bucket)
-
-
-def shingle_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
-                          k: int = 5, min_jaccard: float = 0.5,
-                          max_bucket: int = 500) -> DataFrame:
-    """Exact character-k-shingle Jaccard pairs — the ground truth the
-    MinHash estimator approximates (same shingle space as
-    minhash_signatures_df, same codegen'd explode+substring posting
-    generation: no interpreted transform-HOF shingle array is built)."""
-    n_sh = F.greatest(F.length(text_col) - (k - 1), F.lit(1))
-    posting = (ensure_parallelism(df.filter(F.col(text_col).isNotNull()))
-               .select(F.col(id_col).alias("_id"), F.col(text_col),
-                       F.explode(F.sequence(F.lit(1), n_sh)).alias("_i"))
-               .select("_id",
-                       F.expr(f"substring(`{text_col}`, _i, {k})")
                        .alias("_g"))
                .distinct())
     return _jaccard_pairs_from_posting(posting, min_jaccard, max_bucket)

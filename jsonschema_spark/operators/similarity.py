@@ -57,11 +57,6 @@ def _normalized(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
         F.transform(v, lambda x: x / norm).alias("_v"))
 
 
-def dot_product(a: Column, b: Column) -> Column:
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
-                       F.lit(0.0), lambda acc, v: acc + v)
-
-
 def brute_force_topk(df: DataFrame, id_col: str, vec_col: str,
                      k: int = 1, round_to: Optional[int] = None) -> DataFrame:
     """Exact cosine top-k neighbours per vector — the baseline an ANN

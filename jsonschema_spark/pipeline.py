@@ -79,7 +79,7 @@ def curate(df: DataFrame, schema: dict, id_col: str,
     out = df
     if pairs is not None:
         from .operators.clusters import resolve_duplicates
-        invalid = (~F.coalesce(v.valid_column, F.lit(True))).cast("int")
+        invalid = (~v.valid_column).cast("int")
         pref = prefer if prefer is not None else F.lit(0)
         # null flag INSIDE the composed key too: the outer key is a
         # non-null struct, so resolve_duplicates' own nulls-last guard

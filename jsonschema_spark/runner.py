@@ -155,15 +155,16 @@ class ValidationRun:
             else:
                 conf.unset("spark.sql.sources.partitionOverwriteMode")
         # one aggregate pass: per-group rows, invalid rows, violation
-        # rows (map-side partial agg; no join back to the written files)
-        arr = validator._violation_array()
+        # rows (map-side partial agg; no join back to the written files).
+        # A violation row is a failed check, so count failed checks.
+        failed = sum(((~c.pred).cast("int") for c in validator.checks),
+                     F.lit(0))
         stats = (work.select(
                     "part", validator.valid_column.alias("_v"),
-                    F.size(arr).alias("_nv"))
+                    failed.alias("_nv"))
                  .groupBy("part")
                  .agg(F.count(F.lit(1)).alias("rows"),
-                      F.sum((~F.coalesce(F.col("_v"), F.lit(True)))
-                            .cast("long")).alias("bad"),
+                      F.sum((~F.col("_v")).cast("long")).alias("bad"),
                       F.sum("_nv").alias("nviol"))).collect()
         t1 = time.time()
         rows = [(r["part"], run_id, r["rows"], r["bad"] or 0,

@@ -39,7 +39,7 @@ def running_validity_counts(stream_df: DataFrame, schema: Any,
         rows, bad = state.get if state.exists else (0, 0)
         for pdf in pdfs:
             rows += len(pdf)
-            bad += int((~pdf["_valid"].fillna(False)).sum())
+            bad += int((~pdf["_valid"]).sum())
         state.update((rows, bad))
         yield pd.DataFrame([
             list(key) + [rows, bad, (bad / rows) if rows else 0.0]],

@@ -24,7 +24,7 @@ from typing import Any, Optional, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..validator import CompiledValidator
+from ..validator import CompiledValidator, manifest_aggs
 
 
 def _ensure_event_time(df: DataFrame, ts_col: str) -> DataFrame:
@@ -103,7 +103,7 @@ def windowed_manifest(stream_df: DataFrame, schema: Any, ts_col: str,
 
     Watermark bounds the aggregation state so the query runs forever on
     unbounded input; emit is append-mode once the watermark passes the
-    window end.  The aggregate mirrors ``CompiledValidator.manifest``.
+    window end.  The aggregate is ``CompiledValidator.manifest``'s.
     """
     stream_df = _ensure_event_time(stream_df, ts_col)
     v = CompiledValidator(schema, stream_df)
@@ -112,11 +112,7 @@ def windowed_manifest(stream_df: DataFrame, schema: Any, ts_col: str,
                  .withColumn("_valid", v.valid_column))
     keys = [F.window(F.col(ts_col), window).alias("window"),
             *[F.col(c) for c in partition_by]]
-    return (annotated.groupBy(*keys).agg(
-        F.count(F.lit(1)).alias("rows"),
-        F.sum((~F.col("_valid")).cast("long")).alias("invalid_rows"),
-        (F.sum((~F.col("_valid")).cast("long")) == 0).alias("passed"),
-    ).select(
+    return (annotated.groupBy(*keys).agg(*manifest_aggs("_valid")).select(
         F.col("window.start").alias("window_start"),
         F.col("window.end").alias("window_end"),
         *partition_by, "rows", "invalid_rows", "passed",

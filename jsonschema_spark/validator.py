@@ -10,6 +10,12 @@ equivalents:
 - ``with_valid(df)``     — ``is_valid`` as a boolean column over the scan
 - ``violations(df)``     — ``iter_errors`` as a violation-rows DataFrame
 - ``manifest(df)``       — per-partition pass/fail aggregate
+- ``counts(df)``         — (valid, invalid) row totals
+
+All of them derive from the same compiled check predicates, which are
+never NULL: the one NULL rule is stated on
+:class:`jsonschema_spark.compiler.node.Check` and applied once, in
+``compile_subschema``.  So the surfaces agree row for row.
 
 Everything row-level is one narrow scan: no shuffle, whole-stage codegen
 for native predicates, Arrow-batched pandas UDFs only where Python-exact
@@ -28,6 +34,46 @@ from .compiler.node import Check
 from .compiler.registry import (KeywordRegistry, compile_subschema,
                                 default_registry)
 from .spec import check_schema
+
+
+def violation_array(checks: Sequence[Check],
+                    context: bool = False) -> Column:
+    """Array of violation structs, one per failed check (empty when the
+    row passes).  With `context`, each struct carries ``context_of``
+    (see :meth:`CompiledValidator.violations_with_context`).
+    ``type_match`` carries ``error._matches_type()``
+    (exceptions.py:184-197) — the 5th ``by_relevance`` element,
+    consumed by :func:`operators.bestmatch.best_match`."""
+    def fields(c: Check) -> list[Column]:
+        return [
+            F.lit(c.keyword).alias("keyword"),
+            F.lit(c.json_path).alias("json_path"),
+            F.lit(c.schema_path).alias("schema_path"),
+            c.message.cast("string").alias("message"),
+            c.failing_value.cast("string").alias("failing_value"),
+            *([F.lit(c.context_of).cast("string").alias("context_of")]
+              if context else []),
+            (c.type_match if c.type_match is not None
+             else F.lit(False)).alias("type_match"),
+        ]
+    if not checks:
+        return F.array().cast(
+            "array<struct<keyword:string,json_path:string,"
+            "schema_path:string,message:string,failing_value:string,"
+            + ("context_of:string," if context else "")
+            + "type_match:boolean>>")
+    return F.filter(
+        F.array(*[F.when(~c.pred, F.struct(*fields(c))) for c in checks]),
+        lambda x: x.isNotNull())
+
+
+def manifest_aggs(valid_col: str) -> list[Column]:
+    """rows / invalid_rows / passed over the boolean column `valid_col`
+    — the aggregate of every pass/fail manifest."""
+    invalid = F.sum((~F.col(valid_col)).cast("long"))
+    return [F.count(F.lit(1)).alias("rows"),
+            invalid.alias("invalid_rows"),
+            (invalid == 0).alias("passed")]
 
 
 class CompiledValidator:
@@ -86,12 +132,12 @@ class CompiledValidator:
             resolver=resolver, base_uri=root_uri,
             dynamic_scope=(root_uri,))
         node = compile_subschema(ctx, schema)
+        self._root = node
         self.checks: list[Check] = node.checks
         #: anyOf/oneOf branch errors (ValidationError.context analogue,
         #: exceptions.py:120-131) — excluded from validity and from the
         #: default violations output, consumed by best_match descent
         self.context_checks: list[Check] = node.context
-        self._extra_ok = node._extra_ok
         self.warnings: list[str] = list(ctx.warnings)
         #: compile-time annotation units (readOnly/title/default/...)
         #: with applicability predicates — see annotation_units()
@@ -100,62 +146,32 @@ class CompiledValidator:
     # ------------------------------------------------------------- is_valid
     @property
     def valid_column(self) -> Column:
-        preds = [c.pred for c in self.checks] + list(self._extra_ok)
-        if not preds:
-            return F.lit(True)
-        out = preds[0]
-        for p in preds[1:]:
-            out = out & p
-        return out
+        """Row validity: the root node's AND of its (never-NULL) check
+        predicates, so the column is never NULL either."""
+        return self._root.ok
 
     def with_valid(self, df: DataFrame, col: str = "valid") -> DataFrame:
         return df.withColumn(col, self.valid_column)
 
     # ---------------------------------------------------------- iter_errors
-    def _violation_array(self) -> Column:
-        """Array of violation structs (empty when the row passes).
-        ``type_match`` carries ``error._matches_type()``
-        (exceptions.py:184-197) — the 5th ``by_relevance`` element,
-        consumed by :func:`operators.bestmatch.best_match`."""
-        structs = [
-            F.when(~F.coalesce(c.pred, F.lit(True)), F.struct(
-                F.lit(c.keyword).alias("keyword"),
-                F.lit(c.json_path).alias("json_path"),
-                F.lit(c.schema_path).alias("schema_path"),
-                c.message.cast("string").alias("message"),
-                c.failing_value.cast("string").alias("failing_value"),
-                (c.type_match if c.type_match is not None
-                 else F.lit(False)).alias("type_match"),
-            ))
-            for c in self.checks
-        ]
-        if not structs:
-            return F.array().cast(
-                "array<struct<keyword:string,json_path:string,"
-                "schema_path:string,message:string,failing_value:string,"
-                "type_match:boolean>>")
-        return F.filter(F.array(*structs), lambda x: x.isNotNull())
+    def _violations(self, df: DataFrame, id_cols: Sequence[str],
+                    checks: Sequence[Check], context: bool) -> DataFrame:
+        """Explode :func:`violation_array` into one row per failed check.
+        Rows with no violations are filtered before the explode so
+        passing data never materializes error structs."""
+        keep = [F.col(c) for c in id_cols]
+        return (df
+                .select(*keep, violation_array(checks, context)
+                        .alias("_violations"))
+                .filter(F.size("_violations") > 0)
+                .select(*keep, F.explode("_violations").alias("_v"))
+                .select(*keep, "_v.*"))
 
     def violations(self, df: DataFrame,
                    id_cols: Sequence[str] = ()) -> DataFrame:
         """One row per (instance row × failed keyword) — the vectorized
-        ``iter_errors``.  Rows with no violations are filtered before the
-        explode so passing data never materializes error structs."""
-        arr = self._violation_array()
-        keep = [F.col(c) for c in id_cols]
-        exploded = (df
-                    .select(*keep, arr.alias("_violations"))
-                    .filter(F.size("_violations") > 0)
-                    .select(*keep, F.explode("_violations").alias("_v")))
-        return exploded.select(
-            *keep,
-            F.col("_v.keyword").alias("keyword"),
-            F.col("_v.json_path").alias("json_path"),
-            F.col("_v.schema_path").alias("schema_path"),
-            F.col("_v.message").alias("message"),
-            F.col("_v.failing_value").alias("failing_value"),
-            F.col("_v.type_match").alias("type_match"),
-        )
+        ``iter_errors``."""
+        return self._violations(df, id_cols, self.checks, context=False)
 
     def violations_with_context(self, df: DataFrame,
                                 id_cols: Sequence[str] = ()) -> DataFrame:
@@ -165,37 +181,9 @@ class CompiledValidator:
         carrying ``context_of`` = the composite's schema_path (NULL for
         top-level errors).  Context rows fire only when their composite
         fails; they feed :func:`operators.bestmatch.best_match_deep`."""
-        structs = [
-            F.when(~F.coalesce(c.pred, F.lit(True)), F.struct(
-                F.lit(c.keyword).alias("keyword"),
-                F.lit(c.json_path).alias("json_path"),
-                F.lit(c.schema_path).alias("schema_path"),
-                c.message.cast("string").alias("message"),
-                c.failing_value.cast("string").alias("failing_value"),
-                F.lit(c.context_of).cast("string").alias("context_of"),
-                (c.type_match if c.type_match is not None
-                 else F.lit(False)).alias("type_match"),
-            ))
-            for c in self.checks + self.context_checks
-        ]
-        ddl = ("array<struct<keyword:string,json_path:string,"
-               "schema_path:string,message:string,failing_value:string,"
-               "context_of:string,type_match:boolean>>")
-        arr = (F.filter(F.array(*structs), lambda x: x.isNotNull())
-               if structs else F.array().cast(ddl))
-        keep = [F.col(c) for c in id_cols]
-        exploded = (df
-                    .select(*keep, arr.alias("_violations"))
-                    .filter(F.size("_violations") > 0)
-                    .select(*keep, F.explode("_violations").alias("_v")))
-        return exploded.select(
-            *keep, F.col("_v.keyword").alias("keyword"),
-            F.col("_v.json_path").alias("json_path"),
-            F.col("_v.schema_path").alias("schema_path"),
-            F.col("_v.message").alias("message"),
-            F.col("_v.failing_value").alias("failing_value"),
-            F.col("_v.context_of").alias("context_of"),
-            F.col("_v.type_match").alias("type_match"))
+        return self._violations(df, id_cols,
+                                self.checks + self.context_checks,
+                                context=True)
 
     # ---------------------------------------------------------- annotations
     def annotation_units(self, df: DataFrame,
@@ -212,7 +200,7 @@ class CompiledValidator:
         from .operators.bestmatch import _jsonpath_to_pointer
         valid = self.valid_column
         structs = [
-            F.when(valid & F.coalesce(a.pred, F.lit(False)), F.struct(
+            F.when(valid & a.pred, F.struct(
                 F.lit(a.keyword).alias("keyword"),
                 F.lit("/" + a.schema_path).alias("keywordLocation"),
                 F.lit(a.json_path).alias("json_path"),
@@ -249,11 +237,7 @@ class CompiledValidator:
         else:
             grouped = annotated.groupBy(
                 F.spark_partition_id().alias("partition_id"))
-        return grouped.agg(
-            F.count(F.lit(1)).alias("rows"),
-            F.sum((~F.col("_valid")).cast("long")).alias("invalid_rows"),
-            (F.sum((~F.col("_valid")).cast("long")) == 0).alias("passed"),
-        )
+        return grouped.agg(*manifest_aggs("_valid"))
 
     def counts(self, df: DataFrame) -> tuple[int, int]:
         row = (df.select(self.valid_column.alias("v"))

@@ -276,3 +276,124 @@ def test_best_match_descent_fuzz_vs_reference(spark):
             if got.get(_row) != want:
                 mismatches.append((trial, _row, want, got.get(_row)))
     assert not mismatches, mismatches[:10]
+
+
+# ------------------------------------------------------ surface agreement --
+#
+# Edge-value rows (arrays holding JSON nulls, [], [null], NaN, +-Inf,
+# -0.0, "") x keyword specs: every validity surface -- with_valid,
+# counts, manifest and violations -- must give the reference's verdict
+# for every row, with ANSI on and off.
+
+NAN, INF = float("nan"), float("inf")
+
+EDGE_COLUMNS = {
+    "xi": T.ArrayType(T.LongType()),
+    "xd": T.ArrayType(T.DoubleType()),
+    "xs": T.ArrayType(T.StringType()),
+    "d": T.DoubleType(),
+}
+
+EDGE_ROWS = [
+    ([1, None, 3], [1.5, None], ["a", None], 1.0),
+    ([], [], [], None),
+    ([None], [None], [None], NAN),
+    (None, [NAN, 2.0], ["", "ab"], INF),
+    ([-1, 2], [INF, -INF], [""], -INF),
+    ([2, 2], [-0.0, 0.0], ["abc", "abc"], -0.0),
+    ([0], [NAN, NAN], ["xy", None, "a"], 0.0),
+    ([None, None], [-0.0], None, 7.0),
+]
+
+EDGE_SPECS = [
+    {"xi": {"items": {"minimum": 0}}},
+    {"xd": {"items": {"maximum": 1}}},
+    {"xd": {"items": {"exclusiveMinimum": 0}}},
+    {"xi": {"items": {"multipleOf": 2}}},
+    {"xd": {"items": {"multipleOf": 2}}},
+    {"xi": {"items": {"enum": [1, 3]}}},
+    {"xs": {"items": {"enum": ["a", "", "xy"]}}},
+    {"xi": {"items": {"enum": [1, None]}}},
+    {"xd": {"items": {"enum": [[1.5], 1.5, None]}}},
+    {"xs": {"items": {"enum": [["a"], "ab"]}}},
+    {"xi": {"items": {"const": 2}}},
+    {"xs": {"items": {"const": None}}},
+    {"xi": {"items": {"type": "integer"}}},
+    {"xd": {"items": {"type": ["number", "null"]}}},
+    {"xi": {"items": {"not": {"minimum": 2}}}},
+    {"xs": {"items": {"anyOf": [{"maxLength": 1}, {"pattern": "^a"}]}}},
+    {"xi": {"items": {"oneOf": [{"minimum": 2}, {"maximum": 0}]}}},
+    {"xd": {"items": {"if": {"minimum": 1}, "then": {"maximum": 1.5}}}},
+    {"xs": {"items": {"pattern": "^a"}}},
+    {"xs": {"items": {"maxLength": 1}}},
+    {"xi": {"contains": {"minimum": 2}}},
+    {"xd": {"contains": {"type": "null"}}},
+    {"xs": {"prefixItems": [{"minLength": 1}, {"enum": ["ab", None]}]}},
+    {"xi": {"uniqueItems": True}},
+    {"xd": {"uniqueItems": True}},
+    {"xs": {"uniqueItems": True}},
+    {"d": {"maximum": 5, "exclusiveMaximum": 8}},
+    {"d": {"minimum": 0, "exclusiveMinimum": -1}},
+    {"d": {"multipleOf": 7}},
+    {"d": {"not": {"maximum": 0}}},
+]
+
+
+@pytest.mark.parametrize("ansi", [True, False], ids=["ansi_on", "ansi_off"])
+def test_validity_surfaces_agree_on_edge_values(spark, ansi):
+    from pyspark.sql import functions as F
+
+    old = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", str(ansi).lower())
+    try:
+        sschema = T.StructType(
+            [T.StructField("_row", T.IntegerType(), False)]
+            + [T.StructField(c, t, True) for c, t in EDGE_COLUMNS.items()])
+        df = spark.createDataFrame(
+            [(i, *r) for i, r in enumerate(EDGE_ROWS)], sschema)
+        schemas = [{"properties": spec} for spec in EDGE_SPECS]
+        vals = [CompiledValidator(s, df) for s in schemas]
+
+        flagged = df
+        for i, v in enumerate(vals):
+            flagged = v.with_valid(flagged, f"v{i}")
+            assert not flagged.schema[f"v{i}"].nullable, schemas[i]
+        valid = {r["_row"]: r for r in flagged.collect()}
+        manifests = {(r["_spec"], r["_row"]): r["invalid_rows"]
+                     for r in _union([
+                         v.manifest(df, ["_row"]).withColumn("_spec",
+                                                             F.lit(i))
+                         for i, v in enumerate(vals)]).collect()}
+        violating = {(r["_spec"], r["_row"]) for r in _union([
+            v.violations(df.withColumn("_spec", F.lit(i)),
+                         ["_spec", "_row"])
+            for i, v in enumerate(vals)]).collect()}
+
+        bad = []
+        for i, (schema, v) in enumerate(zip(schemas, vals)):
+            ref = jsonschema.Draft202012Validator(schema)
+            want = {}
+            for j, row in enumerate(EDGE_ROWS):
+                inst = {c: x for c, x in zip(EDGE_COLUMNS, row)
+                        if x is not None}
+                want[j] = ref.is_valid(inst)
+                got = {"with_valid": valid[j][f"v{i}"],
+                       "manifest": manifests[(i, j)] == 0,
+                       "violations": (i, j) not in violating}
+                bad += [(schema, row, surface, g, want[j])
+                        for surface, g in got.items() if g != want[j]]
+            n_invalid = sum(not w for w in want.values())
+            if v.counts(df) != (len(EDGE_ROWS) - n_invalid, n_invalid):
+                bad.append((schema, "counts", v.counts(df), n_invalid))
+            if sum(manifests[(i, j)] for j in want) != n_invalid:
+                bad.append((schema, "manifest sum", n_invalid))
+        assert not bad, bad[:10]
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", old)
+
+
+def _union(frames):
+    out = frames[0]
+    for f in frames[1:]:
+        out = out.unionByName(f)
+    return out
