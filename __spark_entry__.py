@@ -755,13 +755,7 @@ def q_embeddings_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     the scale path the brute-force oracle queries baseline."""
     from jsonschema_spark.operators.similarity import ivf_topk
     e = _t(spark, sf_dir, "embeddings")
-    # approx_n (one metadata-cheap count) switches the quantizer-sample
-    # branch from hash-thinning (which under-samples here and pays a
-    # second full collect) to the full-coverage fraction path — the
-    # training matrix is IDENTICAL at these scales (frac = 1.0), one
-    # driver collect cheaper (r6)
-    return ivf_topk(e, "vec_id", "embedding", k=3, n_lists=16, n_probe=3,
-                    approx_n=e.count())
+    return ivf_topk(e, "vec_id", "embedding", k=3, n_lists=16, n_probe=3)
 
 
 def q_embeddings_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -778,10 +772,7 @@ def q_embeddings_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # n_probe — the query pins the *contract*, not the tuning.
     truth = brute_force_topk(e, "vec_id", "embedding", k=3) \
         .select("id", "neighbour_id")
-    # approx_n: same identical-training-matrix shortcut as
-    # q_embeddings_ann_ivf (frac = 1.0 at these scales)
-    ann = ivf_topk(e, "vec_id", "embedding", k=3, n_lists=16, n_probe=12,
-                   approx_n=e.count()) \
+    ann = ivf_topk(e, "vec_id", "embedding", k=3, n_lists=16, n_probe=12) \
         .select("id", "neighbour_id").withColumn("_hit", F.lit(1))
     # ONE action: truth and ann pipelines each execute once
     row = (truth.join(ann, ["id", "neighbour_id"], "left")

@@ -58,6 +58,7 @@ from typing import Any, Mapping, Optional, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .session import collect_bounded
 from .validator import CompiledValidator
 
 VIOLATION_COLS = ("keyword", "json_path", "schema_path", "message",
@@ -421,10 +422,14 @@ def validate_dataset(df: DataFrame, schema: dict,
     return out
 
 
+#: most distinct dim keys :func:`full_check_counts` compiles into an
+#: ``isin`` set; bigger dims become a broadcast-join flag
+ISIN_MAX_KEYS = 10_000
+
+
 def full_check_counts(df: DataFrame, schema: dict,
                       unique_keys: Sequence[str] = (),
                       referential: Optional[Sequence[tuple]] = None,
-                      isin_max_keys: int = 10_000,
                       image_quality: Optional[dict] = None,
                       ) -> dict:
     """Scan-fused dataset check: validation counts, per-key duplicate
@@ -436,11 +441,12 @@ def full_check_counts(df: DataFrame, schema: dict,
     is_valid predicate sum and the broadcast-dim membership test ride
     along as aggregate expressions, so "validate + unique(image_id) +
     unique(phash) + referential" costs 2 scans/shuffles instead of 4
-    jobs.  Small referential dims (<= `isin_max_keys` distinct keys)
-    are collected driver-side and compiled into codegen'd `isin`
-    membership sets — no join node at all; bigger dims become a
-    broadcast-hash-join membership flag riding the SAME fused pass (an
-    unbounded `isin` would blow up the expression tree where a
+    jobs.  Small referential dims (distinct keys that fit
+    :func:`~jsonschema_spark.session.collect_bounded` at
+    ``ISIN_MAX_KEYS``) are collected driver-side and compiled into
+    codegen'd `isin` membership sets — no join node at all; bigger dims
+    become a broadcast-hash-join membership flag riding the SAME fused
+    pass (an unbounded `isin` would blow up the expression tree where a
     broadcast join would not).
 
     `referential` is a sequence of (fk_col, dim_df, dim_key).
@@ -469,18 +475,16 @@ def full_check_counts(df: DataFrame, schema: dict,
     orphan_cols: dict[str, str] = {}
     fused_df = df  # first fused pass only; extra key passes stay on df
     for i, (fk, dim_df, dim_key) in enumerate(referential or ()):
-        # limit(N+1) probe: one cheap job tells us whether the dim fits
-        # the isin tier without a full count.  NULL dim keys are
-        # dropped BEFORE the isin list is built: `x NOT IN (..., NULL)`
-        # is SQL-NULL for every non-member, which would silently zero
-        # the orphan count (the join tier is naturally immune — NULL
-        # never equi-joins)
-        probe = (dim_df.select(dim_key)
-                 .where(F.col(dim_key).isNotNull()).distinct()
-                 .limit(isin_max_keys + 1).collect())
-        if len(probe) <= isin_max_keys:
+        # NULL dim keys are dropped BEFORE the isin list is built:
+        # `x NOT IN (..., NULL)` is SQL-NULL for every non-member, which
+        # would silently zero the orphan count (the join tier is
+        # naturally immune — NULL never equi-joins)
+        keys = collect_bounded(dim_df.select(dim_key)
+                               .where(F.col(dim_key).isNotNull())
+                               .distinct(), ISIN_MAX_KEYS)
+        if keys is not None:
             miss = F.col(fk).isNotNull() & ~F.col(fk).isin(
-                [r[0] for r in probe])
+                keys.iloc[:, 0].tolist())
         else:
             flag = f"_dimhit{i}"
             dim = (dim_df.select(F.col(dim_key).alias(fk))

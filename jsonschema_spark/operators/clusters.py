@@ -29,6 +29,12 @@ from typing import Optional
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import collect_bounded
+
+#: distinct-edge cap of :func:`connected_components`' driver-side
+#: union-find (~32 MB of edges on the driver at the cap)
+SMALL_GRAPH_MAX_EDGES = 2_000_000
+
 
 def _canonical(edges: DataFrame, src: str, dst: str) -> DataFrame:
     """Undirected edge list oriented (min, max), self-loops dropped,
@@ -103,8 +109,7 @@ def _local_components(spark, rows, id_type) -> DataFrame:
 def connected_components(edges: DataFrame, src: str = "src",
                          dst: str = "dst",
                          max_iterations: int = 25,
-                         reliable_checkpoint: bool = False,
-                         small_graph_threshold: int = 2_000_000
+                         reliable_checkpoint: bool = False
                          ) -> DataFrame:
     """(id, component) for every node in `edges`; ``component`` is the
     smallest node id reachable from ``id`` (so the component min labels
@@ -127,15 +132,13 @@ def connected_components(edges: DataFrame, src: str = "src",
     graphs; raise for more); hitting it raises rather than returning a
     silently-unconverged labeling.
 
-    **Small-graph fast path**: when the distinct edge count (known from
-    the convergence signature's first pass — no extra job) is at most
-    ``small_graph_threshold``, the edges are collected and labeled with
-    a driver-side union-find — identical output, one job instead of ~4
-    per round.  Near-dup pair streams are usually tiny relative to the
-    corpus (the pairs, not the documents, form the graph), so this is
-    the common case even at 10^12 rows scanned; the default 2M edges is
-    ~32 MB on the driver.  Pass ``small_graph_threshold=0`` to force
-    the distributed path.
+    **Small-graph fast path**: when the distinct edges fit
+    :func:`~jsonschema_spark.session.collect_bounded` at
+    ``SMALL_GRAPH_MAX_EDGES``, they are labeled with a driver-side
+    union-find — identical output, one job instead of ~4 per round.
+    Near-dup pair streams are usually tiny relative to the corpus (the
+    pairs, not the documents, form the graph), so this is the common
+    case even at 10^12 rows scanned.
     """
     # Materialize the canonical edges before iterating: the input is
     # often the tail of an expensive pair pipeline (LSH joins, posting
@@ -144,15 +147,13 @@ def connected_components(edges: DataFrame, src: str = "src",
     # recompute 2x per round.
     e = _truncate_lineage(_canonical(edges, src, dst),
                           reliable_checkpoint)
-    sig = _signature(e)
-    if sig[0] == 0:
-        return e.select(F.col("src").alias("id"),
-                        F.col("dst").alias("component"))
-    if sig[0] <= small_graph_threshold:
+    pdf = collect_bounded(e, SMALL_GRAPH_MAX_EDGES)
+    if pdf is not None:
         id_type = e.schema["src"].dataType.simpleString()
-        return _local_components(e.sparkSession,
-                                 e.select("src", "dst").collect(),
-                                 id_type)
+        return _local_components(
+            e.sparkSession, zip(pdf["src"].tolist(), pdf["dst"].tolist()),
+            id_type)
+    sig = _signature(e)
     for _ in range(max_iterations):
         # --- large-star ------------------------------------------------
         sym = e.union(e.select(F.col("dst").alias("src"),

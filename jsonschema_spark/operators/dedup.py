@@ -17,6 +17,15 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import collect_bounded
+
+
+def _pa_id_type(id_dt: str) -> str:
+    """pyarrow type name for a broadcast kernel's Spark id type."""
+    return {"bigint": "int64", "int": "int32", "smallint": "int16",
+            "tinyint": "int8"}.get(id_dt, "string")
+
+
 def ensure_parallelism(df: DataFrame) -> DataFrame:
     """Repartition up to the cluster's default parallelism when the
     input arrives in fewer partitions (e.g. one small parquet file) —
@@ -116,12 +125,12 @@ def minhash_signatures_df(df: DataFrame, id_col: str, text_col: str,
                     .alias("_sig")))
 
 
-def _minhash_pairs_kernel(sigs: DataFrame, num_hashes: int, bands: int,
+def _minhash_pairs_kernel(spark, pdf, num_hashes: int, bands: int,
                           min_jaccard: float, id_dt: str) -> DataFrame:
-    """Bounded-corpus banding kernel: result-identical to the
-    slice-keyed LSH self-join below, for corpora whose signature frame
-    fits a broadcast (the same documented-bounded fast-path contract as
-    ``connected_components``' small-graph union-find).
+    """Bounded-corpus banding kernel over the collected ``(_id, _sig)``
+    signature frame ``pdf``: result-identical to the slice-keyed LSH
+    self-join below, for corpora whose signature frame fits a
+    broadcast.
 
     Why: per-collision cost decides the join — a hot band slice shared
     by m templated docs produces m^2/2 probe-side evaluations of the
@@ -138,12 +147,7 @@ def _minhash_pairs_kernel(sigs: DataFrame, num_hashes: int, bands: int,
 
     rows = num_hashes // bands
     min_agree = int(math.ceil(min_jaccard * num_hashes))
-    spark = sigs.sparkSession
     out_schema = f"id_a {id_dt}, id_b {id_dt}, _agree int"
-    # Arrow transfer (toPandas) instead of the pickled-row collect:
-    # same long values, measured ~3x less driver time on the
-    # array-of-64-longs column at 50k rows
-    pdf = sigs.toPandas()
     if len(pdf) == 0:
         return spark.createDataFrame([], out_schema)
     sort_ix = pdf["_id"].to_numpy().argsort(kind="stable")
@@ -160,9 +164,7 @@ def _minhash_pairs_kernel(sigs: DataFrame, num_hashes: int, bands: int,
     # tasks (identical union of pairs); enumeration is re-run per
     # stride task but is a tiny fraction of the chunk work.
     salt = max(1, (spark.sparkContext.defaultParallelism * 2) // bands)
-    _PA = {"bigint": "int64", "int": "int32", "smallint": "int16",
-           "tinyint": "int8", "string": "string"}
-    pa_id_type = _PA.get(id_dt, "string")
+    pa_id_type = _pa_id_type(id_dt)
 
     def kernel(batches):
         import pyarrow as pa
@@ -270,26 +272,24 @@ def _minhash_pairs_kernel(sigs: DataFrame, num_hashes: int, bands: int,
     return blocks.mapInArrow(kernel, out_schema)
 
 
-#: corpora at or below this row count take the broadcast banding
-#: kernel in :func:`minhash_candidates` (signature matrix ~0.5 KB/row
-#: -> ~300 MB broadcast at the cap); larger corpora use the
-#: distributed slice-keyed self-join.  Raised 200k -> 600k in r6: the
+#: corpora at or below this row count take the broadcast kernels of
+#: :func:`minhash_candidates`, :func:`ngram_jaccard_pairs` and
+#: :func:`hamming_verified_pairs` (signature matrix ~0.5 KB/row ->
+#: ~300 MB broadcast at the cap).  Raised 200k -> 600k in r6: the
 #: kernel measured 31 s at 200k docs / ~800M band collisions (the
 #: byte-digest screen makes collision cost ~128 B/pair), while the
 #: join's per-collision interpreted zip_with would take ~25 minutes
 #: on the same corpus — the crossover where the broadcast stops
 #: paying sits well above the templated-corpus sizes a single box
-#: handles anyway
+#: handles anyway.  Unverified for :func:`hamming_verified_pairs`: its
+#: all-pairs kernel over raw texts was not measured near the cap
 MINHASH_KERNEL_MAX_ROWS = 600_000
 
 
 def minhash_candidates(df: DataFrame, id_col: str, text_col: str,
                        num_hashes: int = 64, bands: int = 16,
                        shingle_k: int = 5,
-                       min_jaccard: float = 0.5,
-                       approx_n: int = None,
-                       small_corpus_threshold: int =
-                       MINHASH_KERNEL_MAX_ROWS) -> DataFrame:
+                       min_jaccard: float = 0.5) -> DataFrame:
     """Near-duplicate pairs via MinHash LSH.
 
     Pipeline: shingle -> signature (codegen'd explode+agg) -> explode
@@ -318,50 +318,49 @@ def minhash_candidates(df: DataFrame, id_col: str, text_col: str,
     identical sessions, a coin-flip this operator must not depend on,
     so the compact HOF form is deliberate.
 
-    Small-corpus fast path: when the input row count (``approx_n``, or
-    one metadata-cheap ``df.count()``) is at most
-    ``small_corpus_threshold``, the banding runs through
-    :func:`_minhash_pairs_kernel` instead of the self-join — identical
-    pair set (parity pinned in tests), ~4x at sf1.0.  Pass
-    ``small_corpus_threshold=0`` to force the distributed join."""
+    Small-corpus fast path: when the signature frame fits
+    :func:`~jsonschema_spark.session.collect_bounded` at
+    ``MINHASH_KERNEL_MAX_ROWS``, the banding runs through
+    :func:`_minhash_pairs_kernel` on the collected signatures instead
+    of the self-join — identical pair set (parity pinned in tests),
+    ~4x at sf1.0.  The signature frame is cached before the probe, so
+    above the cap the self-join reuses the probe's aggregate (released
+    by :func:`clear_dedup_cache`)."""
     rows = num_hashes // bands
     sigs = minhash_signatures_df(df, id_col, text_col, num_hashes,
-                                 shingle_k)
-    n = approx_n if approx_n is not None else \
-        (df.count() if small_corpus_threshold > 0 else None)
-    if n is not None and n <= small_corpus_threshold:
+                                 shingle_k).cache()
+    pdf = collect_bounded(sigs, MINHASH_KERNEL_MAX_ROWS)
+    if pdf is not None:
+        sigs.unpersist()
         id_dt = df.schema[id_col].dataType.simpleString()
-        pairs = _minhash_pairs_kernel(sigs, num_hashes, bands,
-                                      min_jaccard, id_dt)
-        est = F.col("_agree") / F.lit(float(num_hashes))
-        return (pairs.select("id_a", "id_b", est.alias("est_jaccard"))
-                .groupBy("id_a", "id_b")
-                .agg(F.max("est_jaccard").alias("est_jaccard"))
-                .filter(F.col("est_jaccard") >= min_jaccard))
-    slices = F.array(*[
-        F.struct(F.lit(bb).alias("_band"),
-                 F.struct(*[F.element_at("_sig", bb * rows + r + 1)
-                            .alias(f"h{r}") for r in range(rows)])
-                 .alias("_slice"))
-        for bb in range(bands)])
-    banded = (sigs.select("_id", "_sig", F.explode(slices).alias("_bs"))
-              .select("_id", "_sig", "_bs._band", "_bs._slice"))
-    a = banded.alias("a")
-    b = banded.alias("b")
+        pairs = _minhash_pairs_kernel(df.sparkSession, pdf, num_hashes,
+                                      bands, min_jaccard, id_dt)
+    else:
+        _DEDUP_PERSISTED.append(sigs)
+        slices = F.array(*[
+            F.struct(F.lit(bb).alias("_band"),
+                     F.struct(*[F.element_at("_sig", bb * rows + r + 1)
+                                .alias(f"h{r}") for r in range(rows)])
+                     .alias("_slice"))
+            for bb in range(bands)])
+        banded = (sigs.select("_id", "_sig", F.explode(slices).alias("_bs"))
+                  .select("_id", "_sig", "_bs._band", "_bs._slice"))
+        a = banded.alias("a")
+        b = banded.alias("b")
 
-    agree = F.size(F.filter(
-        F.zip_with(F.col("a._sig"), F.col("b._sig"),
-                   lambda x, y: x == y),
-        lambda v: v))
-    min_agree = int(math.ceil(min_jaccard * num_hashes))
+        agree = F.size(F.filter(
+            F.zip_with(F.col("a._sig"), F.col("b._sig"),
+                       lambda x, y: x == y),
+            lambda v: v))
+        min_agree = int(math.ceil(min_jaccard * num_hashes))
 
-    pairs = (a.join(b, (F.col("a._band") == F.col("b._band"))
-                    & (F.col("a._slice") == F.col("b._slice"))
-                    & (F.col("a._id") < F.col("b._id"))
-                    & (agree >= F.lit(min_agree)))
-             .select(F.col("a._id").alias("id_a"),
-                     F.col("b._id").alias("id_b"),
-                     agree.alias("_agree")))
+        pairs = (a.join(b, (F.col("a._band") == F.col("b._band"))
+                        & (F.col("a._slice") == F.col("b._slice"))
+                        & (F.col("a._id") < F.col("b._id"))
+                        & (agree >= F.lit(min_agree)))
+                 .select(F.col("a._id").alias("id_a"),
+                         F.col("b._id").alias("id_b"),
+                         agree.alias("_agree")))
     est = F.col("_agree") / F.lit(float(num_hashes))
     return (pairs.select("id_a", "id_b", est.alias("est_jaccard"))
             .groupBy("id_a", "id_b")
@@ -504,10 +503,11 @@ _DEDUP_PERSISTED: list = []
 
 def clear_dedup_cache() -> int:
     """Unpersist every signature frame a prior :func:`simhash_duplicates`
-    call left cached (needed while its returned DataFrame is being
-    consumed — Spark cannot unpersist lazily; long-lived applications
-    call this once results are materialized, mirroring
-    ``similarity.clear_ivf_cache``).  Returns frames released."""
+    or over-cap :func:`minhash_candidates` call left cached (needed
+    while its returned DataFrame is being consumed — Spark cannot
+    unpersist lazily; long-lived applications call this once results
+    are materialized, mirroring ``similarity.clear_ivf_cache``).
+    Returns frames released."""
     n = 0
     while _DEDUP_PERSISTED:
         try:
@@ -839,12 +839,11 @@ def _jaccard_pairs_from_posting(posting: DataFrame, min_jaccard: float,
             .filter(F.col("jaccard") >= min_jaccard))
 
 
-def _ngram_pairs_kernel(df: DataFrame, id_col: str, text_col: str,
-                        n: int, min_jaccard: float, max_bucket: int,
-                        id_dt: str) -> DataFrame:
-    """Bounded-corpus inverted-index kernel: result-identical to the
-    posting-list self-join in :func:`ngram_jaccard_pairs` (same gated
-    fast-path contract as ``_minhash_pairs_kernel``).
+def _ngram_pairs_kernel(spark, pdf, n: int, min_jaccard: float,
+                        max_bucket: int, id_dt: str) -> DataFrame:
+    """Bounded-corpus inverted-index kernel over the collected
+    ``(id, text)`` frame ``pdf`` (non-null texts): result-identical to
+    the posting-list self-join in :func:`ngram_jaccard_pairs`.
 
     Why: the posting self-join emits one row per shared-gram co-pair —
     sum(df^2) over kept grams, 114M rows at sf1.0 for a 200-doc df cap
@@ -863,15 +862,12 @@ def _ngram_pairs_kernel(df: DataFrame, id_col: str, text_col: str,
     short joined gram."""
     import numpy as np
 
-    spark = df.sparkSession
     out_schema = f"id_a {id_dt}, id_b {id_dt}, jaccard double"
-    rows = (df.filter(F.col(text_col).isNotNull())
-            .select(id_col, text_col).collect())
-    if not rows:
+    if len(pdf) == 0:
         return spark.createDataFrame([], out_schema)
-    rows.sort(key=lambda r: r[0])
-    ids = [r[0] for r in rows]
-    txts = [r[1] for r in rows]
+    pdf = pdf.sort_values(pdf.columns[0], kind="stable")
+    ids = pdf.iloc[:, 0].tolist()
+    txts = pdf.iloc[:, 1].tolist()
     bc = spark.sparkContext.broadcast((ids, txts))
     import uuid
     bc_token = uuid.uuid4().hex
@@ -879,9 +875,7 @@ def _ngram_pairs_kernel(df: DataFrame, id_col: str, text_col: str,
     par = spark.sparkContext.defaultParallelism
     n_blocks = min(max(4 * par, 1), n_docs)
     mj = float(min_jaccard)
-    _PA = {"bigint": "int64", "int": "int32", "smallint": "int16",
-           "tinyint": "int8", "string": "string"}
-    pa_id_type = _PA.get(id_dt, "string")
+    pa_id_type = _pa_id_type(id_dt)
 
     def _prep(pid):
         # resolve the cache through the worker-side module import:
@@ -987,26 +981,24 @@ def _ngram_pairs_kernel(df: DataFrame, id_col: str, text_col: str,
 
 def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
                         n: int = 3, min_jaccard: float = 0.6,
-                        max_bucket: int = 200,
-                        approx_n: int = None,
-                        small_corpus_threshold: int =
-                        MINHASH_KERNEL_MAX_ROWS) -> DataFrame:
+                        max_bucket: int = 200) -> DataFrame:
     """Exact word-n-gram Jaccard pairs (see _jaccard_pairs_from_posting
     for the posting-list shape).  The posting list is generated
     codegen-side: split once per doc, explode gram start indices, and
     slice+join per exploded row — no interpreted transform-HOF.
 
-    Small-corpus fast path (r6): at or below
-    ``small_corpus_threshold`` input rows (``approx_n``, or one
-    metadata-cheap count) the pairs come from
-    :func:`_ngram_pairs_kernel` — identical output (parity pinned in
-    tests; the sf1.0 posting join emitted 114M co-pair rows for a
-    25-pair result).  ``small_corpus_threshold=0`` forces the join."""
-    n_rows = approx_n if approx_n is not None else \
-        (df.count() if small_corpus_threshold > 0 else None)
-    if n_rows is not None and n_rows <= small_corpus_threshold:
+    Small-corpus fast path (r6): when the non-null ``(id, text)``
+    rows fit :func:`~jsonschema_spark.session.collect_bounded` at
+    ``MINHASH_KERNEL_MAX_ROWS``, the pairs come from
+    :func:`_ngram_pairs_kernel` over the collected rows — identical
+    output (parity pinned in tests; the sf1.0 posting join emitted
+    114M co-pair rows for a 25-pair result)."""
+    pdf = collect_bounded(df.filter(F.col(text_col).isNotNull())
+                          .select(id_col, text_col),
+                          MINHASH_KERNEL_MAX_ROWS)
+    if pdf is not None:
         id_dt = df.schema[id_col].dataType.simpleString()
-        return _ngram_pairs_kernel(df, id_col, text_col, n,
+        return _ngram_pairs_kernel(df.sparkSession, pdf, n,
                                    min_jaccard, max_bucket, id_dt)
     words = F.split(F.trim(F.col(text_col)), r"\s+")
     cnt = F.greatest(F.size("_w") - (n - 1), F.lit(1))
@@ -1120,9 +1112,11 @@ def hamming_verified_pairs(df: DataFrame, id_col: str, text_col: str,
     with vectorized xor/popcount and verifies each with an exact
     interned-shingle ``np.intersect1d`` — only verified pairs (hundreds)
     ever become rows.  No candidate row stream, no array shuffle, no
-    driver compute beyond the bounded collect (same contract as
-    ``brute_force_topk``'s broadcast side).  Shingle interning is
-    exact string identity — no hashing, so no collision caveat.
+    driver compute beyond the bounded collect.  Shingle interning is
+    exact string identity — no hashing, so no collision caveat.  A
+    panel that does not fit ``collect_bounded`` at
+    ``MINHASH_KERNEL_MAX_ROWS`` gets the composition above (cache
+    released by :func:`clear_dedup_cache`).
 
     Anchors are strided across blocks so early/late blocks carry equal
     suffix work.  Ties/floats: jaccard = inter/(na+nb-inter) in IEEE
@@ -1133,17 +1127,23 @@ def hamming_verified_pairs(df: DataFrame, id_col: str, text_col: str,
     out_schema = f"id_a {id_dt}, id_b {id_dt}, jaccard double"
     spark = df.sparkSession
 
-    sigs = simhash_packed_df(df, id_col, text_col, bits)
-    sig_rows = sigs.collect()
-    if not sig_rows:
+    sigs = collect_bounded(simhash_packed_df(df, id_col, text_col, bits),
+                           MINHASH_KERNEL_MAX_ROWS)
+    texts = None if sigs is None else collect_bounded(
+        df.select(id_col, text_col).filter(F.col(text_col).isNotNull()),
+        MINHASH_KERNEL_MAX_ROWS)
+    if texts is None:
+        cand = simhash_duplicates(df, id_col, text_col, bits=bits,
+                                  max_hamming=max_hamming,
+                                  band_bits=band_bits)
+        return verify_pairs_exact_jaccard(cand, df, id_col, text_col,
+                                          k=k, min_jaccard=min_jaccard)
+    if len(sigs) == 0:
         return spark.createDataFrame([], out_schema)
-    texts = {r[0]: r[1] for r in
-             df.select(id_col, text_col)
-               .filter(F.col(text_col).isNotNull()).collect()}
-    sig_rows.sort(key=lambda r: r[0])
-    ids = [r[0] for r in sig_rows]
-    codes = np.array([r[1] for r in sig_rows], dtype=np.int64) \
-        .view(np.uint64)
+    texts = dict(zip(texts.iloc[:, 0].tolist(), texts.iloc[:, 1].tolist()))
+    sigs = sigs.sort_values("_id", kind="stable")
+    ids = sigs["_id"].tolist()
+    codes = sigs["_sh"].to_numpy(dtype=np.int64).view(np.uint64)
     txt_list = [texts.get(i) for i in ids]
     bc = spark.sparkContext.broadcast((ids, codes, txt_list))
     import uuid
@@ -1156,9 +1156,7 @@ def hamming_verified_pairs(df: DataFrame, id_col: str, text_col: str,
     n_blocks = min(max(4 * par, 1), n)
     mh = np.uint64(max_hamming)
     mj = float(min_jaccard)
-    _PA_TYPES = {"bigint": "int64", "int": "int32", "smallint": "int16",
-                 "tinyint": "int8", "string": "string"}
-    pa_id_type = _PA_TYPES.get(id_dt, "string")
+    pa_id_type = _pa_id_type(id_dt)
 
     def _prep(bc_id, pid):
         # worker-side module import: see the ngram kernel's _prep —

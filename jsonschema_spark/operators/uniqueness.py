@@ -25,6 +25,12 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import collect_bounded
+
+#: most candidate hashes ``hash_prefilter`` puts in its ``isin``
+#: filter; more means massive duplication, where it buys nothing
+PREFILTER_MAX_HASHES = 100_000
+
 
 def duplicate_keys(df: DataFrame, keys: Sequence[str],
                    strategy: str = "groupby",
@@ -63,16 +69,16 @@ def duplicate_keys(df: DataFrame, keys: Sequence[str],
         # inputs the second scan costs more than the narrower shuffle
         # saves (measured), so the single-pass groupBy stays default.
         h = F.xxhash64(*kcols)
-        cand_rows = (df.select(h.alias("_h"))
-                     .groupBy("_h").agg(F.count(F.lit(1)).alias("_c"))
-                     .filter(F.col("_c") > 1)
-                     .select("_h").limit(100_001).collect())
-        if not cand_rows:
-            return df.sparkSession.createDataFrame(
-                [], df.select(*kcols).schema.add("dup_count", "long"))
-        if len(cand_rows) <= 100_000:
-            hashes = [r["_h"] for r in cand_rows]
-            return (df.filter(h.isin(hashes))
+        cand = collect_bounded(
+            df.select(h.alias("_h"))
+            .groupBy("_h").agg(F.count(F.lit(1)).alias("_c"))
+            .filter(F.col("_c") > 1).select("_h"),
+            PREFILTER_MAX_HASHES)
+        if cand is not None:
+            if len(cand) == 0:
+                return df.sparkSession.createDataFrame(
+                    [], df.select(*kcols).schema.add("dup_count", "long"))
+            return (df.filter(h.isin(cand["_h"].tolist()))
                     .groupBy(*kcols)
                     .agg(F.count(F.lit(1)).alias("dup_count"))
                     .filter(F.col("dup_count") > 1))

@@ -4,7 +4,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(app: str = "jsonschema_spark", cores: int | None = None,
@@ -62,3 +62,18 @@ def get_spark(app: str = "jsonschema_spark", cores: int | None = None,
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
+
+
+def collect_bounded(df: DataFrame, max_rows: int):
+    """``df`` as pandas if it has at most ``max_rows`` rows, else
+    ``None`` — the one "fits on the driver?" gate of every driver-side
+    fast path, read against a module constant at call time (``None``:
+    take the distributed path; ``max_rows <= 0``: no job at all).  The
+    probe IS the collect: one Arrow ``limit()`` merging up to
+    ``max_rows + 1`` rows of EVERY partition in fetch order, no count
+    job — callers sort what depends on row order, and over the cap the
+    probe costs about a pass over ``df``."""
+    if max_rows <= 0:
+        return None
+    pdf = df.limit(max_rows + 1).toPandas()
+    return pdf if len(pdf) <= max_rows else None

@@ -33,18 +33,20 @@ def _both(spark, build):
     return on, off
 
 
-def test_connected_components_ansi(ansi):
+def test_connected_components_ansi(ansi, monkeypatch):
     """The r5 regression case: uniform 64-bit hash sums overflow long
     almost surely — the decimal(38,0) signature must survive ANSI."""
     import random
 
+    from jsonschema_spark.operators import clusters
     from jsonschema_spark.operators.clusters import connected_components
     rng = random.Random(11)
     edges = [(rng.randint(0, 400), rng.randint(0, 400))
              for _ in range(1500)]
     df = ansi.createDataFrame(edges, "src long, dst long")
-    out_dist = connected_components(df, small_graph_threshold=0).collect()
     out_local = connected_components(df).collect()
+    monkeypatch.setattr(clusters, "SMALL_GRAPH_MAX_EDGES", 0)
+    out_dist = connected_components(df).collect()
     assert sorted(map(tuple, out_dist)) == sorted(map(tuple, out_local))
 
 

@@ -12,6 +12,7 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
+from jsonschema_spark.operators import clusters
 from jsonschema_spark.operators.clusters import (
     cluster_summary,
     connected_components,
@@ -45,9 +46,18 @@ class _UnionFind:
         return {x: mins[r] for x, r in roots.items()}
 
 
-def _spark_cc(spark, edges, **kw):
+def _cc(df, caps, **kw):
+    """connected_components with the module caps in `caps` overridden
+    (the path is chosen inside the call; the result is lazy)."""
+    with pytest.MonkeyPatch.context() as mp:
+        for name, value in caps.items():
+            mp.setattr(clusters, name, value)
+        return connected_components(df, **kw)
+
+
+def _spark_cc(spark, edges, caps=None):
     df = spark.createDataFrame(edges, "src long, dst long")
-    got = connected_components(df, **kw)
+    got = _cc(df, caps or {})
     return {r["id"]: r["component"] for r in got.collect()}
 
 
@@ -58,7 +68,7 @@ def _expected(edges):
     return uf.components()
 
 
-PATHS = [{"small_graph_threshold": 0},   # distributed large-star/small-star
+PATHS = [{"SMALL_GRAPH_MAX_EDGES": 0},   # distributed large-star/small-star
          {}]                              # driver union-find fast path
 
 
@@ -66,7 +76,7 @@ PATHS = [{"small_graph_threshold": 0},   # distributed large-star/small-star
 def test_cc_chain(spark, kw):
     # Diameter-n chain: the shape that defeats O(diameter) propagation.
     edges = [(i, i + 1) for i in range(60)]
-    assert _spark_cc(spark, edges, **kw) == _expected(edges)
+    assert _spark_cc(spark, edges, kw) == _expected(edges)
 
 
 def test_cc_chain_reversed_and_shuffled(spark):
@@ -83,7 +93,7 @@ def test_cc_random_graphs(spark, kw):
         n = 120
         edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(90)]
         edges = [e for e in edges if e[0] != e[1]]
-        assert _spark_cc(spark, edges, **kw) == _expected(edges), \
+        assert _spark_cc(spark, edges, kw) == _expected(edges), \
             f"trial {trial}"
 
 
@@ -91,7 +101,7 @@ def test_cc_random_graphs(spark, kw):
 def test_cc_cliques_and_singletons(spark, kw):
     edges = ([(a, b) for a in range(5) for b in range(a + 1, 5)]
              + [(100, 101)] + [(200, 201), (201, 202), (200, 202)])
-    assert _spark_cc(spark, edges, **kw) == _expected(edges)
+    assert _spark_cc(spark, edges, kw) == _expected(edges)
 
 
 def test_cc_string_ids(spark):
@@ -99,7 +109,7 @@ def test_cc_string_ids(spark):
         [("b", "c"), ("a", "b"), ("x", "y")], "src string, dst string")
     for kw in PATHS:
         got = {r["id"]: r["component"] for r in
-               connected_components(df, **kw).collect()}
+               _cc(df, kw).collect()}
         assert got == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}
 
 
@@ -118,8 +128,7 @@ def test_cc_nonconvergence_guard(spark):
     df = spark.createDataFrame([(i, i + 1) for i in range(20)],
                                "src long, dst long")
     with pytest.raises(RuntimeError, match="converge"):
-        connected_components(df, max_iterations=1,
-                             small_graph_threshold=0)
+        _cc(df, PATHS[0], max_iterations=1)
 
 
 def test_duplicate_clusters_columns(spark):

@@ -36,17 +36,25 @@ def test_stats_violations(spark):
     assert kws == {"stats:max_null_rate", "stats:max"}
 
 
-def test_duplicate_keys_both_strategies(spark):
+def test_duplicate_keys_both_strategies(spark, monkeypatch):
+    from jsonschema_spark.operators import uniqueness
     df = spark.createDataFrame(
         [(1, "a"), (2, "b"), (3, "a"), (4, "c"), (5, "a"), (6, "b")],
         "id int, k string")
-    for strat in ("groupby", "sort"):
+    for strat in ("groupby", "sort", "hash_prefilter"):
         out = {r["k"]: r["dup_count"]
                for r in duplicate_keys(df, ["k"], strategy=strat).collect()}
         assert out == {"a": 3, "b": 2}, strat
     salted = {r["k"]: r["dup_count"]
               for r in duplicate_keys(df, ["k"], salt=4).collect()}
     assert salted == {"a": 3, "b": 2}
+    # hash_prefilter on clean keys, and above its candidate-hash cap
+    # (falls through to the single-pass groupBy)
+    assert duplicate_keys(df, ["id"], strategy="hash_prefilter").count() == 0
+    monkeypatch.setattr(uniqueness, "PREFILTER_MAX_HASHES", 0)
+    over = {r["k"]: r["dup_count"] for r in
+            duplicate_keys(df, ["k"], strategy="hash_prefilter").collect()}
+    assert over == {"a": 3, "b": 2}
 
 
 def test_uniqueness_violations_on_images(spark):
@@ -189,11 +197,12 @@ def test_real_bmp_codec_pipeline(spark):
         == {"pixelInvariant"}
 
 
-def test_full_check_counts_dim_size_guard(spark):
-    """VERDICT-r2 #7: above `isin_max_keys` distinct dim keys the fused
+def test_full_check_counts_dim_size_guard(spark, monkeypatch):
+    """VERDICT-r2 #7: above `ISIN_MAX_KEYS` distinct dim keys the fused
     referential membership switches from a driver-side codegen'd isin
     set to a broadcast-hash-join flag column (an unbounded isin would
     blow up the expression tree).  Both paths must agree."""
+    from jsonschema_spark import dataset
     from jsonschema_spark.dataset import full_check_counts
 
     df = (spark.range(5000)
@@ -208,14 +217,13 @@ def test_full_check_counts_dim_size_guard(spark):
     schema = {"properties": {"x": {"maximum": 5}}}
     expected_orph = df.filter("fk >= 2000").count()
     expected_bad = df.filter("x > 5").count()
-    # force the join path (threshold below the dim's 2000 keys)...
-    joined = full_check_counts(df, schema, unique_keys=["rid"],
-                               referential=[("fk", dim, "k")],
-                               isin_max_keys=100)
-    # ...and the isin path (threshold above)
+    # the isin path (the default cap is above the dim's 2000 keys)...
     isin = full_check_counts(df, schema, unique_keys=["rid"],
-                             referential=[("fk", dim, "k")],
-                             isin_max_keys=1_000_000)
+                             referential=[("fk", dim, "k")])
+    # ...and the join path, forced by a cap of 0
+    monkeypatch.setattr(dataset, "ISIN_MAX_KEYS", 0)
+    joined = full_check_counts(df, schema, unique_keys=["rid"],
+                               referential=[("fk", dim, "k")])
     for out in (joined, isin):
         assert out["rows"] == 5000
         assert out["invalid_rows"] == expected_bad

@@ -68,6 +68,24 @@ def test_ngram_jaccard(docs):
     assert 0.5 <= pairs[(1, 2)] < 1.0
 
 
+def test_dedup_kernels_launch_no_count_job(docs, monkeypatch):
+    """The kernel paths' size gate is the bounded collect itself: no
+    count() job runs before it (count() raises here), and the pairs
+    are the ones the unpatched tests above expect."""
+    from pyspark.sql.classic.dataframe import DataFrame as _DF
+
+    def boom(self):
+        raise AssertionError("a dedup kernel gate launched a count() job")
+
+    monkeypatch.setattr(_DF, "count", boom)
+    mh = minhash_candidates(docs, "doc_id", "text", min_jaccard=0.5)
+    ng = ngram_jaccard_pairs(docs, "doc_id", "text", n=3, min_jaccard=0.5)
+    mh_pairs = {(r["id_a"], r["id_b"]) for r in mh.collect()}
+    ng_pairs = {(r["id_a"], r["id_b"]) for r in ng.collect()}
+    assert {(1, 2), (1, 4)} <= mh_pairs
+    assert {(1, 2), (1, 4)} <= ng_pairs
+
+
 @pytest.fixture(scope="module")
 def vectors(spark):
     import random
@@ -350,48 +368,57 @@ def test_embedding_near_dup_chunked_exactness(spark):
 
 
 def test_ivf_no_count_job_with_explicit_n_lists(spark, monkeypatch):
-    """VERDICT-r3 #5: explicit n_lists must not pay a full count() pass.
-    count() is monkeypatched to raise, so merely completing certifies no
-    count job was launched; results still match brute force when every
-    cell is probed."""
+    """VERDICT-r3 #5: explicit n_lists must not pay a full count() pass,
+    on either path.  count() is monkeypatched to raise, so merely
+    completing certifies no count job was launched; results still
+    match brute force when every cell is probed.  Exactly the
+    distributed runs persist an assignment frame, and clear_ivf_cache
+    releases exactly those."""
     import numpy as np
     # NB: patch the CLASSIC DataFrame — pyspark.sql.DataFrame is the
     # abstract base whose methods the classic class overrides, so
     # patching the base intercepts nothing on Spark 4
     from pyspark.sql.classic.dataframe import DataFrame as _DF
-    from jsonschema_spark.operators.similarity import (brute_force_topk,
-                                                       clear_ivf_cache,
-                                                       ivf_topk)
+    from jsonschema_spark.operators import similarity
     rng = np.random.default_rng(3)
     rows = [(i, [float(x) for x in rng.normal(size=16)])
             for i in range(400)]
     df = spark.createDataFrame(rows, "vec_id long, v array<double>")
     want = {r["id"]: r["neighbour_id"]
             for r in brute_force_topk(df, "vec_id", "v", k=1).collect()}
+    similarity.clear_ivf_cache()
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
 
     def boom(self):
         raise AssertionError("ivf_topk launched a count() job")
 
     monkeypatch.setattr(_DF, "count", boom)
-    for hint in (None, 400):
-        ann = ivf_topk(df, "vec_id", "v", k=1, n_lists=4, n_probe=4,
-                       approx_n=hint)
-        got = {r["id"]: r["neighbour_id"] for r in ann.collect()}
-        assert got == want
+    for cap in (0, similarity.IVF_KERNEL_MAX_ROWS):
+        monkeypatch.setattr(similarity, "IVF_KERNEL_MAX_ROWS", cap)
+        for hint in (None, 400):
+            ann = similarity.ivf_topk(df, "vec_id", "v", k=1, n_lists=4,
+                                      n_probe=4, approx_n=hint)
+            got = {r["id"]: r["neighbour_id"] for r in ann.collect()}
+            assert got == want
     monkeypatch.undo()
-    assert clear_ivf_cache() >= 2
-    assert spark.sparkContext._jsc.getPersistentRDDs().size() == 0 or True
+    assert jsc.getPersistentRDDs().size() == before + 2
+    assert similarity.clear_ivf_cache() == 2
+    assert jsc.getPersistentRDDs().size() == before
 
 
-def test_clear_ivf_cache_releases_assignment(spark):
+def test_clear_ivf_cache_releases_assignment(spark, monkeypatch):
     """The assignment persist (and its release) is a distributed-path
     contract; the r6 bounded-corpus kernel persists nothing."""
+    from jsonschema_spark.operators import similarity
     from jsonschema_spark.operators.similarity import (clear_ivf_cache,
                                                        ivf_topk)
     e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     before = spark.sparkContext._jsc.getPersistentRDDs().size()
+    monkeypatch.setattr(similarity, "IVF_KERNEL_MAX_ROWS", 0)
     out = ivf_topk(e, "vec_id", "embedding", k=1, n_lists=8, n_probe=2,
-                   approx_n=e.count(), small_corpus_threshold=0)
+                   approx_n=e.count())
+    monkeypatch.undo()
     out.count()  # materialize -> assignment persisted
     assert spark.sparkContext._jsc.getPersistentRDDs().size() > before
     clear_ivf_cache()
@@ -611,17 +638,19 @@ def test_audio_features(spark):
         assert r["duration_s"] > 0.04
 
 
-def test_ivf_clustered_input_sample_not_prefix_biased(spark):
+def test_ivf_clustered_input_sample_not_prefix_biased(spark, monkeypatch):
     """r4 review finding: with explicit n_lists and no approx_n the
-    quantizer sample must not be a partition prefix.  On a SORTED
-    two-cluster table (prefix = one cluster only), the hash-thinned
-    bounded sample must reach the same recall as a fully unbiased
-    fraction sample (approx_n supplied) — prefix training would
-    collapse recall for the unseen cluster."""
+    distributed path's quantizer sample must not be a partition
+    prefix.  On a SORTED two-cluster table (prefix = one cluster only),
+    the hash-thinned bounded sample must reach the same recall as a
+    fully unbiased fraction sample (approx_n supplied) — prefix
+    training would collapse recall for the unseen cluster."""
     import numpy as np
+    from jsonschema_spark.operators import similarity
     from jsonschema_spark.operators.similarity import (brute_force_topk,
                                                        clear_ivf_cache,
                                                        ivf_topk)
+    monkeypatch.setattr(similarity, "IVF_KERNEL_MAX_ROWS", 0)
     rng = np.random.default_rng(0)
     a = rng.normal(loc=+5, scale=0.3, size=(1500, 12))
     b = rng.normal(loc=-5, scale=0.3, size=(1500, 12))

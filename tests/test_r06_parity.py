@@ -24,17 +24,20 @@ def docs(spark):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
-def test_minhash_kernel_vs_join_parity(docs):
+def test_minhash_kernel_vs_join_parity(docs, monkeypatch):
     """The broadcast banding kernel must emit exactly the distributed
-    slice-keyed self-join's pair set."""
-    from jsonschema_spark.operators.dedup import minhash_candidates
-    join_path = minhash_candidates(docs, "doc_id", "text",
-                                   min_jaccard=0.3,
-                                   small_corpus_threshold=0)
-    kernel_path = minhash_candidates(docs, "doc_id", "text",
-                                     min_jaccard=0.3)
-    a = sorted(map(tuple, join_path.collect()))
-    b = sorted(map(tuple, kernel_path.collect()))
+    slice-keyed self-join's pair set.  Only the join keeps the cached
+    signature frame (so it does not recompute the probe's aggregate);
+    clear_dedup_cache releases it."""
+    from jsonschema_spark.operators import dedup
+    dedup.clear_dedup_cache()
+    b = sorted(map(tuple, dedup.minhash_candidates(
+        docs, "doc_id", "text", min_jaccard=0.3).collect()))
+    assert dedup.clear_dedup_cache() == 0
+    monkeypatch.setattr(dedup, "MINHASH_KERNEL_MAX_ROWS", 0)
+    a = sorted(map(tuple, dedup.minhash_candidates(
+        docs, "doc_id", "text", min_jaccard=0.3).collect()))
+    assert dedup.clear_dedup_cache() == 1
     assert a == b and len(a) > 0
 
 
@@ -54,6 +57,24 @@ def test_hamming_verified_pairs_vs_composition(docs):
     b = sorted(map(tuple, new.collect()))
     clear_dedup_cache()
     assert a == b and len(a) > 0
+
+
+def test_hamming_verified_pairs_over_cap_takes_composition(docs,
+                                                           monkeypatch):
+    """A panel above the cap is never collected to the driver: it gets
+    the composition the fused kernel stands in for (whose simhash
+    signature frame is the one thing clear_dedup_cache releases), with
+    the same pairs."""
+    from jsonschema_spark.operators import dedup
+    dedup.clear_dedup_cache()
+    kernel = sorted(map(tuple, dedup.hamming_verified_pairs(
+        docs, "doc_id", "text", max_hamming=12, band_bits=4).collect()))
+    assert dedup.clear_dedup_cache() == 0
+    monkeypatch.setattr(dedup, "MINHASH_KERNEL_MAX_ROWS", 50)
+    got = sorted(map(tuple, dedup.hamming_verified_pairs(
+        docs, "doc_id", "text", max_hamming=12, band_bits=4).collect()))
+    assert dedup.clear_dedup_cache() == 1
+    assert got == kernel and len(got) > 0
 
 
 def test_repetition_kernel_vs_column_functions(docs):
@@ -142,29 +163,23 @@ def test_exact_fingerprint_pairs_join_back(docs):
     assert a == b and len(a) > 0
 
 
-def test_ngram_jaccard_kernel_vs_join_parity(docs):
+def test_ngram_jaccard_kernel_vs_join_parity(docs, monkeypatch):
     """Inverted-index kernel == posting-list self-join, including the
     tokenization corner cases (kept empty tokens, short docs, tabs)."""
-    from jsonschema_spark.operators.dedup import ngram_jaccard_pairs
-    join_path = ngram_jaccard_pairs(docs, "doc_id", "text", n=3,
-                                    min_jaccard=0.3,
-                                    small_corpus_threshold=0)
-    kernel_path = ngram_jaccard_pairs(docs, "doc_id", "text", n=3,
-                                      min_jaccard=0.3)
+    from jsonschema_spark.operators import dedup
+    kernel_path = dedup.ngram_jaccard_pairs(docs, "doc_id", "text", n=3,
+                                            min_jaccard=0.3)
+    monkeypatch.setattr(dedup, "MINHASH_KERNEL_MAX_ROWS", 0)
+    join_path = dedup.ngram_jaccard_pairs(docs, "doc_id", "text", n=3,
+                                          min_jaccard=0.3)
     a = sorted(map(tuple, join_path.collect()))
     b = sorted(map(tuple, kernel_path.collect()))
     assert a == b and len(a) > 0
 
 
-def test_ivf_kernel_vs_cogroup_parity(spark):
-    """Broadcast IVF kernel == distributed cogroup path: identical
-    selected (id, neighbour_id) sets under both probe configs the
-    declared queries use (cosines may differ by BLAS-accumulation
-    ulps, which the selection comparison deliberately excludes and
-    the queries' contracts — rows-only / recall>=bar — tolerate)."""
+@pytest.fixture(scope="module")
+def vectors(spark):
     import numpy as np
-    from jsonschema_spark.operators.similarity import (clear_ivf_cache,
-                                                       ivf_topk)
     rng = np.random.default_rng(3)
     rows = [(i, [float(x) for x in rng.normal(size=16)])
             for i in range(600)]
@@ -172,17 +187,83 @@ def test_ivf_kernel_vs_cogroup_parity(spark):
     for i in range(600, 640):
         rows.append((i, [float(x) for x in
                          np.asarray(rows[i % 600][1]) * 2.0]))
-    df = spark.createDataFrame(rows, "vec_id long, v array<double>")
+    return spark.createDataFrame(rows, "vec_id long, v array<double>")
+
+
+def _ivf_pairs(df, cap, monkeypatch, **kw):
+    from jsonschema_spark.operators import similarity
+    monkeypatch.setattr(similarity, "IVF_KERNEL_MAX_ROWS", cap)
+    out = similarity.ivf_topk(df, "vec_id", "v", k=3, n_lists=8, **kw)
+    return sorted((r["id"], r["neighbour_id"]) for r in out.collect())
+
+
+def test_ivf_kernel_vs_cogroup_parity(vectors, monkeypatch):
+    """Broadcast IVF kernel == distributed cogroup path: identical
+    selected (id, neighbour_id) sets under both probe configs the
+    declared queries use (cosines may differ by BLAS-accumulation
+    ulps, which the selection comparison deliberately excludes and
+    the queries' contracts — rows-only / recall>=bar — tolerate)."""
+    from jsonschema_spark.operators.similarity import (
+        IVF_KERNEL_MAX_ROWS, clear_ivf_cache)
     for probe in (2, 5):
-        dist = ivf_topk(df, "vec_id", "v", k=3, n_lists=8,
-                        n_probe=probe, approx_n=640,
-                        small_corpus_threshold=0)
-        kern = ivf_topk(df, "vec_id", "v", k=3, n_lists=8,
-                        n_probe=probe, approx_n=640)
-        a = sorted((r["id"], r["neighbour_id"]) for r in dist.collect())
-        b = sorted((r["id"], r["neighbour_id"]) for r in kern.collect())
+        a = _ivf_pairs(vectors, 0, monkeypatch, n_probe=probe,
+                       approx_n=640)
+        b = _ivf_pairs(vectors, IVF_KERNEL_MAX_ROWS, monkeypatch,
+                       n_probe=probe, approx_n=640)
         clear_ivf_cache()
         assert a == b and len(a) == 640 * 3
+
+
+def test_ivf_understated_hint_takes_distributed_path(spark, vectors,
+                                                     monkeypatch):
+    """An ``approx_n`` far below the real row count must not send a
+    corpus above the cap to the driver: the bounded collect sees the
+    real size, so the distributed path runs (its assignment frame is
+    persisted, then released by clear_ivf_cache) and returns the
+    kernel's pairs."""
+    from jsonschema_spark.operators.similarity import (
+        IVF_KERNEL_MAX_ROWS, clear_ivf_cache)
+    clear_ivf_cache()
+    kernel = _ivf_pairs(vectors, IVF_KERNEL_MAX_ROWS, monkeypatch,
+                        n_probe=2)
+    assert clear_ivf_cache() == 0
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    dist = _ivf_pairs(vectors, 100, monkeypatch, n_probe=2, approx_n=10)
+    assert jsc.getPersistentRDDs().size() == before + 1
+    assert clear_ivf_cache() == 1
+    assert jsc.getPersistentRDDs().size() == before
+    assert dist == kernel and len(dist) == 640 * 3
+
+
+def test_ivf_hint_above_cap_skips_probe(vectors, monkeypatch):
+    """An ``approx_n`` above the cap routes straight to the distributed
+    path: no bounded collect of vectors that would be discarded."""
+    from jsonschema_spark.operators import similarity
+
+    def boom(*a, **kw):
+        raise AssertionError("ivf_topk probed a corpus hinted over cap")
+
+    kernel = _ivf_pairs(vectors, similarity.IVF_KERNEL_MAX_ROWS,
+                        monkeypatch, n_probe=2)
+    monkeypatch.setattr(similarity, "collect_bounded", boom)
+    dist = _ivf_pairs(vectors, 100, monkeypatch, n_probe=2, approx_n=640)
+    assert similarity.clear_ivf_cache() == 1
+    assert dist == kernel and len(dist) == 640 * 3
+
+
+def test_ivf_kernel_independent_of_row_order(vectors):
+    """The kernel fits its quantizer on the collected rows in id order,
+    so the order rows arrive in (collect_bounded keeps fetch order, not
+    partition order) cannot change the centroids or the result."""
+    from jsonschema_spark.operators.similarity import ivf_topk
+
+    def pairs(df):
+        out = ivf_topk(df, "vec_id", "v", k=3, n_lists=8, n_probe=2,
+                       approx_n=640)
+        return sorted((r["id"], r["neighbour_id"]) for r in out.collect())
+
+    assert pairs(vectors.orderBy(F.xxhash64("vec_id"))) == pairs(vectors)
 
 
 def test_ivf_driver_normalize_bit_identity(spark):

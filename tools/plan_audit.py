@@ -7,6 +7,7 @@ from __future__ import annotations
 import os
 import re
 import sys
+from unittest import mock
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -155,17 +156,21 @@ def main() -> None:
         best_match(v.violations(img, ["image_id"]), ["image_id"])))
 
     # 11. IVF ANN: bounded cogroup, no pair rows
-    from jsonschema_spark.operators.similarity import ivf_topk
+    from jsonschema_spark.operators import similarity
     emb = spark.read.parquet(f"{sf}/embeddings.parquet")
+    # a size cap of 0 forces the distributed path (chosen in the call)
+    with mock.patch.object(similarity, "IVF_KERNEL_MAX_ROWS", 0):
+        ivf = similarity.ivf_topk(emb, "vec_id", "embedding", k=3,
+                                  n_lists=16, n_probe=4)
     cases.append((
         "ivf_topk",
-        "IVF ANN: centroids broadcast, ONE shared assignment UDF, "
+        "IVF ANN, distributed path forced (IVF_KERNEL_MAX_ROWS=0): "
+        "centroids broadcast, ONE shared assignment UDF, "
         "members salted into fixed-size chunks (per-cell counts are a "
         "broadcast n_lists-row aggregate), cell+chunk-local cogroup "
         "scoring — no pair rows in the plan, no cogroup above "
         "chunk_size members",
-        ivf_topk(emb, "vec_id", "embedding", k=3, n_lists=16,
-                 n_probe=4)))
+        ivf))
 
     # 12. chunk-salted simhash band join: bounded groups, broadcast
     # bucket histogram, signatures only in the shuffle
@@ -254,20 +259,21 @@ def main() -> None:
     # round carries only 2-column id pairs; the returned labeling is
     # one groupBy over the converged star edges (lineage truncated, so
     # the audit sees the final frame, not the per-round history)
-    from jsonschema_spark.operators.clusters import connected_components
+    from jsonschema_spark.operators import clusters
     chain = spark.range(2_000).select(
         F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b"))
+    with mock.patch.object(clusters, "SMALL_GRAPH_MAX_EDGES", 0):
+        cc = clusters.connected_components(chain, "id_a", "id_b")
     cases.append((
         "connected_components",
         "large-star/small-star transitive closure on an adversarial "
         "2,000-node chain, distributed path forced "
-        "(small_graph_threshold=0): converges in O(log n) alternating "
+        "(SMALL_GRAPH_MAX_EDGES=0): converges in O(log n) alternating "
         "rounds — each round two groupBy shuffles + two joins carrying "
         "ONLY (id, id) pairs, never documents; lineage is truncated "
         "per round (localCheckpoint) so plan depth stays constant; the "
         "audited final labeling is one exchange over the star edges",
-        connected_components(chain, "id_a", "id_b",
-                             small_graph_threshold=0)))
+        cc))
 
     # 19. survivor election: min_by groupBy (map-side partial), not a
     # window — a mega-cluster cannot serialize through one task
